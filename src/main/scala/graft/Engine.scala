@@ -21,8 +21,10 @@ object Engine {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); read as long epoch-nanos
-      // so nothing silently truncates (see sources.Tables.events).
+      // events.ts may be int64 nanos, TIMESTAMP or TIMESTAMP_NTZ
+      // depending on the writer (sources.Tables.events normalizes all
+      // three); this keeps the nanos arm exact by reading TIMESTAMP(NANOS)
+      // as long epoch-nanos instead of truncating to micros.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // bucketed-table writes (Tables.writeBucketed) need a warehouse;
       // keep it out of the source tree

@@ -191,18 +191,6 @@ object Dedup {
         .cast("double") / numHashes,
       4)
 
-  /** MinHash + LSH near-duplicate pairs.
-    *
-    * Pipeline: [[minHashSignatures]] → [[minHashBuckets]] →
-    * bucket-local self-join for candidate pairs → exact signature
-    * agreement estimates Jaccard.
-    *
-    * Scale: work is O(shingles) + O(docs × bands) + bucket-local
-    * joins; never cartesian. `maxBucket` drops degenerate buckets
-    * (thousands of identical boilerplate docs) the way web-scale dedup
-    * drops ubiquitous shingles; AQE skew-join splitting covers the
-    * rest. Returns (id_a, id_b, est_jaccard) with id_a < id_b.
-    */
   /** Marginal-novelty scoring — "how much NEW content does this
     * source/shard actually add?", the value-of-data measurement
     * behind mixture and acquisition decisions (a source that is 95%
@@ -548,6 +536,18 @@ object Dedup {
     }.toDF("bands", "rows_per_band", "s50", "fp_area", "fn_area", "cost", "recommended")
   }
 
+  /** MinHash + LSH near-duplicate pairs.
+    *
+    * Pipeline: [[minHashSignatures]] → [[minHashBuckets]] →
+    * bucket-local self-join for candidate pairs → exact signature
+    * agreement estimates Jaccard.
+    *
+    * Scale: work is O(shingles) + O(docs × bands) + bucket-local
+    * joins; never cartesian. `maxBucket` drops degenerate buckets
+    * (thousands of identical boilerplate docs) the way web-scale dedup
+    * drops ubiquitous shingles; AQE skew-join splitting covers the
+    * rest. Returns (id_a, id_b, est_jaccard) with id_a < id_b.
+    */
   def minHashLSH(
       df: DataFrame,
       id: Column,
@@ -557,8 +557,23 @@ object Dedup {
       shingleSize: Int = 5,
       threshold: Double = 0.5,
       maxBucket: Int = 200,
-      seed: Long = 42L): DataFrame = {
-    val sigs = minHashSignatures(df, id, text, numHashes, shingleSize, seed)
+      seed: Long = 42L): DataFrame =
+    minHashLSHSigs(minHashSignatures(df, id, text, numHashes, shingleSize, seed),
+      numHashes, bands, threshold, maxBucket)
+
+  /** [[minHashLSH]] over an ALREADY-SIGNED (id, sig) frame, laid out
+    * as [[minHashSignatures]] emits it (no empty signatures). For
+    * callers that sign once and feed several tiers from one
+    * materialized frame: signing inside every tier re-plans and
+    * re-runs the whole upstream per consumer. `numHashes` must match
+    * the signatures' length.
+    */
+  def minHashLSHSigs(
+      sigs: DataFrame,
+      numHashes: Int = 64,
+      bands: Int = 16,
+      threshold: Double = 0.5,
+      maxBucket: Int = 200): DataFrame = {
     val bucketed = minHashBuckets(sigs, numHashes, bands)
     // degenerate-bucket cap in one pass: count window over the bucket
     // (same shape as the df-cap in ngramJaccard — no groupBy+semi-join)
@@ -612,8 +627,22 @@ object Dedup {
       shingleSize: Int = 5,
       threshold: Double = 0.5,
       maxBucket: Int = 200,
-      seed: Long = 42L): DataFrame = {
-    val shardSigs = minHashSignatures(shard, id, text, numHashes, shingleSize, seed)
+      seed: Long = 42L): DataFrame =
+    minHashLSHIncrementalSigs(
+      minHashSignatures(shard, id, text, numHashes, shingleSize, seed),
+      corpusSigs, numHashes, bands, threshold, maxBucket)
+
+  /** [[minHashLSHIncremental]] with the shard ALREADY SIGNED: both
+    * sides are (id, sig) frames laid out as [[minHashSignatures]]
+    * emits them (see [[minHashLSHSigs]] for why a caller signs once).
+    */
+  def minHashLSHIncrementalSigs(
+      shardSigs: DataFrame,
+      corpusSigs: DataFrame,
+      numHashes: Int = 64,
+      bands: Int = 16,
+      threshold: Double = 0.5,
+      maxBucket: Int = 200): DataFrame = {
     val shardB = minHashBuckets(shardSigs, numHashes, bands)
     val corpusB = minHashBuckets(corpusSigs.select(col("id"), col("sig")), numHashes, bands)
     val wB = org.apache.spark.sql.expressions.Window.partitionBy("bucket")
@@ -624,7 +653,7 @@ object Dedup {
       .select(col("x.id").as("shard_id"), col("y.id").as("corpus_id"))
       .distinct()
     // shuffle_hash on the signature attaches: corpus-sized array
-    // frames must never DRIVER-broadcast (see minHashLSH)
+    // frames must never DRIVER-broadcast (see minHashLSHSigs)
     cand
       .join(shardSigs.select(col("id").as("shard_id"), col("sig").as("sig_a")).hint("shuffle_hash"), "shard_id")
       .join(corpusSigs.select(col("id").as("corpus_id"), col("sig").as("sig_b")).hint("shuffle_hash"), "corpus_id")
@@ -1247,8 +1276,6 @@ object Dedup {
     // in that job instead of paying a separate eager materialization
     // job first. Same single evaluation, same lineage truncation, half
     // the driver round-trips — job latency is serial on a cluster too.
-    val ccDbg0 = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    val tS = System.nanoTime()
     // Checkpoint the pair tier ONCE, before the symmetrization: the
     // old `sym = pairs ∪ pairs.swap` checkpoint carried the (often
     // expensive) pair-generation subtree TWICE in its plan — planned
@@ -1257,14 +1284,9 @@ object Dedup {
     // from the checkpointed single copy is a trivial projection.
     val e0c = e0.localCheckpoint(false)
     val sym = e0c.unionByName(e0c.select(col("b").as("a"), col("a").as("b")))
-    if (ccDbg0) System.err.println(
-      f"[cc-minlabel] sym-create ${(System.nanoTime() - tS) / 1e9}%.2fs")
-    val tL = System.nanoTime()
     var labels = sym.select(col("a").as("id")).distinct()
       .withColumn("comp", col("id"))
       .localCheckpoint(false)
-    if (ccDbg0) System.err.println(
-      f"[cc-minlabel] labels-create ${(System.nanoTime() - tL) / 1e9}%.2fs")
     // FRONTIER propagation (r17, guide §2.3/§2.4 — process only what
     // can still change): comp_i(v) = min(comp_{i-1}(v), min over
     // neighbors u of comp_{i-1}(u)); a neighbor whose label did NOT
@@ -1277,9 +1299,7 @@ object Dedup {
     var frontier = labels
     var changed = 1L
     var i = 0
-    val ccDbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
     while (changed > 0 && i < maxIter) {
-      val t0 = System.nanoTime()
       val nbrMin = sym.join(frontier.withColumnRenamed("id", "b2"), col("b") === col("b2"))
         .groupBy(col("a").as("id"))
         .agg(min(col("comp")).as("nbr_comp"))
@@ -1293,8 +1313,6 @@ object Dedup {
       changed = frontier.count()
       labels = updated.select(col("id"), col("comp_new").as("comp"))
       i += 1
-      if (ccDbg) System.err.println(
-        f"[cc-minlabel] round $i ${(System.nanoTime() - t0) / 1e9}%.2fs changed=$changed")
     }
     // Fail LOUDLY on non-convergence: returning local-min labels would
     // let clusterDuplicates keep several representatives of one cluster
@@ -1359,8 +1377,6 @@ object Dedup {
     var eSig = edgeSig(edges)
     var converged = eSig._1 == 0L
     var i = 0
-    val ccDbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    var tR = System.nanoTime()
     while (!converged && i < maxIter) {
       // large-star over the SYMMETRIC neighborhood: strictly-larger
       // neighbors re-attach to the neighborhood min
@@ -1387,11 +1403,6 @@ object Dedup {
       edges = next
       eSig = nSig
       i += 1
-      if (ccDbg) {
-        System.err.println(
-          f"[cc-star] round $i ${(System.nanoTime() - tR) / 1e9}%.2fs edges=${nSig._1}")
-        tR = System.nanoTime()
-      }
     }
     if (!converged) throw new IllegalStateException(
       s"connectedComponentsStar did not converge in $maxIter rounds")

@@ -64,8 +64,6 @@ package object operators {
     * a failure cannot corrupt a sibling).
     */
   def checkpointPar(dfs: DataFrame*): Seq[DataFrame] = {
-    if (sys.env.contains("SPARK_GRAFT_SEQ_SEAMS")) // A/B escape hatch
-      return dfs.toSeq.map(_.localCheckpoint())
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global

@@ -365,12 +365,13 @@ object EventStreams {
     * (1) re-reads the on-disk signature index
     * (`Dedup.minHashSignatures` layout), (2) drops batch docs whose
     * estimated Jaccard against any INDEXED doc clears `threshold`
-    * (`Dedup.minHashLSHIncremental` — bipartite, bounded by batch
+    * (`Dedup.minHashLSHIncrementalSigs` — bipartite, bounded by batch
     * size × bands, the corpus is never re-signed), (3) resolves
     * WITHIN-batch near-dup clusters to their min-id winner
-    * (`Dedup.minHashLSH` + `clusterDuplicates` — batch-sized work),
+    * (`Dedup.minHashLSHSigs` + `clusterDuplicates` — batch-sized work),
     * (4) lands accepted rows and their signatures in per-batch
-    * `batch_id=<N>` dirs with overwrite. The seeded hash family makes
+    * `batch_id=<N>` dirs with overwrite. The batch is signed once, into
+    * one checkpoint every tier and the index write read. The seeded hash family makes
     * a replayed batch byte-identical, so at-least-once replay yields
     * exactly-once output (E7's delivery contract); bootstrap keys off
     * committed `_SUCCESS` markers, and a committed-but-unreadable
@@ -394,47 +395,87 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val rootP = new org.apache.hadoop.fs.Path(sigPath)
-        val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasCommitted = hfs.exists(rootP) &&
-          hfs.globStatus(new org.apache.hadoop.fs.Path(sigPath, "batch_id=*/_SUCCESS"))
-            .nonEmpty
-        // exclude this batch's own signatures on replay (crash between
-        // the sig write and the checkpoint commit) — same data-loss
-        // mode as E7: the batch would otherwise near-dup-match ITSELF
-        // and land empty
-        val index =
-          if (hasCommitted) spark.read.parquet(sigPath)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          else
-            spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("id",
-                  org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("sig",
-                  org.apache.spark.sql.types.ArrayType(
-                    org.apache.spark.sql.types.LongType, containsNull = false)))))
-        val hits = graft.operators.Dedup.minHashLSHIncremental(
-            batch, col(idCol), col(textCol), index,
-            numHashes, bands, shingleSize, threshold)
-          .select(col("shard_id").as("__drop")).distinct()
-        val survivors = batch.join(hits, col(idCol) === col("__drop"), "left_anti")
-        val pairs = graft.operators.Dedup.minHashLSH(
-          survivors, col(idCol), col(textCol),
-          numHashes, bands, shingleSize, threshold)
-        val drops = graft.operators.Dedup.clusterDuplicates(
-          pairs, col("id_a"), col("id_b"))
-        val accepted = survivors
-          .join(drops, col(idCol) === col("drop_id"), "left_anti")
-          .localCheckpoint()
-        accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        graft.operators.Dedup.minHashSignatures(
-            accepted, col(idCol), col(textCol), numHashes, shingleSize)
-          .write.mode("overwrite").parquet(s"$sigPath/batch_id=$batchId")
+        nearDedupSigned(signOnce(graft.operators.scaleOut(batch), textCol,
+            numHashes, shingleSize),
+          idCol, sigPath, outPath, batchId, numHashes, bands, threshold)
+        ()
       }
       .start()
+  }
+
+  /** `df` plus its MinHash signature in `__sig` (the
+    * [[graft.operators.Dedup.minHashSignatures]] hash family, empty for
+    * docs shorter than `shingleSize` tokens), materialized ONCE: every
+    * near-dup tier of [[nearDedupSigned]] and the signature-index write
+    * read this seam instead of re-running `df`'s plan and the kernel
+    * per consumer.
+    */
+  private def signOnce(
+      df: DataFrame, textCol: String, numHashes: Int, shingleSize: Int): DataFrame =
+    df.withColumn("__sig", graft.functions.MinHashSignature.minhashSignature(
+        graft.functions.tokens(col(textCol)), numHashes, shingleSize))
+      .localCheckpoint()
+
+  /** The committed signature index under `sigPath`, fenced to batches
+    * older than `batchId` — a replayed batch must not near-dup-match
+    * its OWN signatures (crash between the sig write and the checkpoint
+    * commit) and land empty. Bootstrap keys off committed `_SUCCESS`
+    * markers: before the first commit the index is empty, and a
+    * committed-but-unreadable index propagates the error.
+    */
+  private def signatureIndex(
+      spark: org.apache.spark.sql.SparkSession, sigPath: String, batchId: Long): DataFrame = {
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+    val rootP = new org.apache.hadoop.fs.Path(sigPath)
+    val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasCommitted = hfs.exists(rootP) &&
+      hfs.globStatus(new org.apache.hadoop.fs.Path(sigPath, "batch_id=*/_SUCCESS"))
+        .nonEmpty
+    if (hasCommitted) spark.read.parquet(sigPath)
+      .filter(col("batch_id") < batchId).drop("batch_id")
+    else spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("id", LongType),
+        StructField("sig", ArrayType(LongType, containsNull = false)))))
+  }
+
+  /** The near-dup tiers E11 and E46 share, over a [[signOnce]] frame:
+    * drop rows whose estimated Jaccard against the fenced signature
+    * index clears `threshold` (bipartite LSH — the corpus is never
+    * re-signed), resolve within-batch near-dup clusters to their min-id
+    * winner, then land the accepted rows (without `__sig`) in
+    * `outPath/batch_id=N` and their signatures — the batch's own, not
+    * re-signed — in `sigPath/batch_id=N`. Docs with no signature pair
+    * with nothing, pass, and get no index row. Returns the accepted
+    * rows, checkpointed and still carrying `__sig`.
+    */
+  private def nearDedupSigned(
+      signed: DataFrame,
+      idCol: String,
+      sigPath: String,
+      outPath: String,
+      batchId: Long,
+      numHashes: Int,
+      bands: Int,
+      threshold: Double): DataFrame = {
+    import graft.operators.Dedup
+    def sigs(df: DataFrame): DataFrame =
+      df.select(col(idCol).as("id"), col("__sig").as("sig"))
+        .filter(size(col("sig")) > 0)
+    val index = signatureIndex(signed.sparkSession, sigPath, batchId)
+    val hits = Dedup.minHashLSHIncrementalSigs(
+        sigs(signed), index, numHashes, bands, threshold)
+      .select(col("shard_id").as("__drop")).distinct()
+    val survivors = signed.join(hits, col(idCol) === col("__drop"), "left_anti")
+    val drops = Dedup.clusterDuplicates(
+      Dedup.minHashLSHSigs(sigs(survivors), numHashes, bands, threshold),
+      col("id_a"), col("id_b"))
+    val accepted = survivors
+      .join(drops, col(idCol) === col("drop_id"), "left_anti")
+      .localCheckpoint()
+    accepted.drop("__sig").write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+    sigs(accepted).write.mode("overwrite").parquet(s"$sigPath/batch_id=$batchId")
+    accepted
   }
 
   /** E8: streaming CDC apply — the streaming twin of batch
@@ -1695,12 +1736,18 @@ object EventStreams {
     *     overcounts only, so an all-old shard can never sneak in as
     *     new). One verdict row per group lands in
     *     `verdictPath/batch_id=N`.
-    *  2. GATE: stateless per-row curation ([[curateStream]]) — quality
-    *     score + language-id thresholds; no state, no shuffle.
-    *  3. DEDUP: gated rows run `Dedup.minHashLSHIncremental` against
-    *     the on-disk signature index (bipartite — the corpus is never
-    *     re-signed), then within-batch LSH + min-id cluster winners;
-    *     accepted rows and their signatures land in per-batch dirs.
+    *  2. GATE + SIGN: stateless per-row curation ([[curateStream]]) —
+    *     quality score + language-id thresholds, no state — and the
+    *     MinHash signature, materialized as ONE checkpoint seam: the
+    *     gate and the signing kernel run once per batch, however many
+    *     tiers read them.
+    *  3. DEDUP: from that seam, gated rows run the bipartite LSH tier
+    *     (`Dedup.minHashLSHIncrementalSigs`) against the on-disk
+    *     signature index (the corpus is never re-signed), then
+    *     within-batch LSH (`Dedup.minHashLSHSigs`) + min-id cluster
+    *     winners; accepted rows land in a per-batch dir, and the index
+    *     write takes their signatures from the seam instead of
+    *     re-signing them.
     *  4. MAINTAIN: the corpus theta sketch merges the ACCEPTED rows
     *     (the sketch tracks what the corpus actually holds) and
     *     publishes as snapshot version N.
@@ -1753,6 +1800,15 @@ object EventStreams {
     * spec's batch-equality proof drives THIS function with the same
     * shard sequence the stream sees, so stream==batch is equality of
     * orchestration, not a re-implementation that could drift.
+    *
+    * Gate-and-sign seam: the admitted rows are spread to the cluster's
+    * parallelism, gated, signed into `__sig` and checkpointed once;
+    * the vs-index LSH tier, both anti-joins, the in-batch LSH tier and
+    * the signature-index write (`(id, __sig)` of the accepted rows,
+    * empty signatures filtered) all read that frame. Without it every
+    * consumer re-inlines the gate and re-signs the batch, and the
+    * driver-side optimization and planning of that plan, not the
+    * kernels, set the batch's latency.
     */
   def corpusBuildBatch(
       batch: DataFrame,
@@ -1807,44 +1863,16 @@ object EventStreams {
       broadcast(verdict.filter(col("admitted")).select(col("grp").as("__adm"))),
       col(groupCol) === col("__adm"), "left_semi")
 
-    // ---- 2. GATE: stateless quality + language curation
-    val gated = curateStream(admitted, textCol, minQuality)
+    // ---- 2. GATE + SIGN: stateless quality + language curation, and
+    // the MinHash signature, materialized as ONE seam that every tier
+    // below reads
+    val signed = signOnce(
+      curateStream(graft.operators.scaleOut(admitted), textCol, minQuality),
+      textCol, numHashes, shingleSize)
 
     // ---- 3. DEDUP: vs the batch-fenced signature index, then in-batch
-    val rootP = new org.apache.hadoop.fs.Path(sigPath)
-    val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasCommitted = hfs.exists(rootP) &&
-      hfs.globStatus(new org.apache.hadoop.fs.Path(sigPath, "batch_id=*/_SUCCESS"))
-        .nonEmpty
-    val index =
-      if (hasCommitted) spark.read.parquet(sigPath)
-        .filter(col("batch_id") < batchId).drop("batch_id")
-      else
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("sig",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.LongType, containsNull = false)))))
-    val hits = graft.operators.Dedup.minHashLSHIncremental(
-        gated, col(idCol), col(textCol), index,
-        numHashes, bands, shingleSize, threshold)
-      .select(col("shard_id").as("__drop")).distinct()
-    val survivors = gated.join(hits, col(idCol) === col("__drop"), "left_anti")
-    val pairs = graft.operators.Dedup.minHashLSH(
-      survivors, col(idCol), col(textCol),
-      numHashes, bands, shingleSize, threshold)
-    val drops = graft.operators.Dedup.clusterDuplicates(
-      pairs, col("id_a"), col("id_b"))
-    val accepted = survivors
-      .join(drops, col(idCol) === col("drop_id"), "left_anti")
-      .localCheckpoint()
-    accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-    graft.operators.Dedup.minHashSignatures(
-        accepted, col(idCol), col(textCol), numHashes, shingleSize)
-      .write.mode("overwrite").parquet(s"$sigPath/batch_id=$batchId")
+    val accepted = nearDedupSigned(signed, idCol, sigPath, outPath, batchId,
+      numHashes, bands, threshold)
 
     // ---- 4. MAINTAIN: corpus sketch tracks the ACCEPTED corpus
     val accSketch = graft.operators.Profile.thetaSketchTable(

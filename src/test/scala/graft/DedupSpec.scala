@@ -93,9 +93,16 @@ class DedupSpec extends SparkSpec {
         slice(graft.functions.tokens(col("text")), lit(1),
           greatest(floor(size(graft.functions.tokens(col("text"))) * 4 / 5), lit(1)).cast("int")),
         " ").as("text"))
-    val pairs = Dedup.minHashLSH(docs.unionByName(trunc), col("id"), col("text"),
+    val corpus = docs.unionByName(trunc)
+    val pairs = Dedup.minHashLSH(corpus, col("id"), col("text"),
         numHashes = 64, bands = 16, shingleSize = 5, threshold = 0.4)
       .collect()
+    // the pre-signed entry point is the same tier over the same signatures
+    val fromSigs = Dedup.minHashLSHSigs(
+        Dedup.minHashSignatures(corpus, col("id"), col("text")),
+        numHashes = 64, bands = 16, threshold = 0.4)
+      .collect()
+    assert(fromSigs.toSet == pairs.toSet, "minHashLSHSigs != minHashLSH")
     val planted = pairs.count(r => r.getLong(1) == r.getLong(0) + 1000000)
     // 80%-token overlap → shingle jaccard ≈ 0.7; 16 bands of 4 rows
     // detect that with prob ≈ 1-(1-0.7^4)^16 ≈ 0.99 per pair.
@@ -115,9 +122,15 @@ class DedupSpec extends SparkSpec {
       (1000L, "completely different content words alpha beta gamma delta epsilon zeta eta theta"),
       (1001L, "completely different content words alpha beta gamma delta epsilon zeta eta"))
       .toDF("id", "text")
-    val pairs = Dedup.minHashLSH(boiler.unionByName(real), col("id"), col("text"),
+    val corpus = boiler.unionByName(real)
+    val pairs = Dedup.minHashLSH(corpus, col("id"), col("text"),
         numHashes = 64, bands = 16, shingleSize = 5, threshold = 0.4, maxBucket = 50)
       .collect()
+    val fromSigs = Dedup.minHashLSHSigs(
+        Dedup.minHashSignatures(corpus, col("id"), col("text")),
+        numHashes = 64, bands = 16, threshold = 0.4, maxBucket = 50)
+      .collect()
+    assert(fromSigs.toSet == pairs.toSet, "minHashLSHSigs != minHashLSH")
     assert(pairs.exists(r => r.getLong(0) == 1000L && r.getLong(1) == 1001L),
       s"planted near-dup pair lost: ${pairs.take(5).toSeq}")
     assert(!pairs.exists(r => r.getLong(0) < 200L && r.getLong(1) < 200L),
@@ -502,6 +515,13 @@ class DedupSpec extends SparkSpec {
       .collect { case (a, b) if a < 1000000 && b >= 1000000 => (b, a) }
       .toSet
     assert(pairs.toSet == batch, "incremental pairs != batch cross pairs")
+    // the pre-signed entry point pairs the same shard signatures identically
+    val fromSigs = graft.operators.Dedup.minHashLSHIncrementalSigs(
+        graft.operators.Dedup.minHashSignatures(shard, col("id"), col("text")),
+        corpusSigs, threshold = 0.4)
+      .select("shard_id", "corpus_id").as[(Long, Long)].collect()
+    assert(fromSigs.toSet == pairs.toSet,
+      "minHashLSHIncrementalSigs != minHashLSHIncremental")
   }
 
   test("exactKeepWithin: burst keeps its first row; re-publication after the window survives") {
