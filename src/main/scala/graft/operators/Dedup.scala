@@ -610,10 +610,15 @@ object Dedup {
     * `corpusSigs` is a stored [[minHashSignatures]] table (id, sig),
     * read back from parquet: the corpus side costs a projection +
     * generate (no shingling, no aggregate). Only the (small) shard is
-    * signed; the candidate join is BIPARTITE shard-bucket ×
-    * corpus-bucket — bounded by the shard size × bands, independent of
-    * corpus size — and skips the corpus self-pairing entirely.
+    * signed, and the candidate join is BIPARTITE shard-bucket ×
+    * corpus-bucket, so it skips the corpus self-pairing entirely.
     * `maxBucket` caps degenerate corpus buckets as in [[minHashLSH]].
+    *
+    * Cost: the join's OUTPUT is bounded by shard size × bands ×
+    * `maxBucket`, but the work is not independent of corpus size —
+    * every call re-bands the WHOLE stored index (corpus rows × bands)
+    * and runs the `maxBucket` bucket-count window over all of those
+    * rows, so per-shard cost grows linearly with the corpus.
     * Returns (shard_id, corpus_id, est_jaccard). `numHashes`,
     * `shingleSize` and `seed` must match the stored index.
     */
@@ -690,10 +695,10 @@ object Dedup {
 
   /** INCREMENTAL SimHash near-dup: a new shard against the STORED
     * corpus signature index — the D2b shape for the SimHash tier.
-    * The shard signs only itself; the bipartite chunk-bucket join
-    * bounds work by shard size × chunks, independent of corpus size
-    * (the corpus side is the pre-signed index, pre-bucketable by
-    * chunk). Returns (shard_id, corpus_id, hamming).
+    * The shard signs only itself and the corpus side is the pre-signed
+    * index. The bipartite chunk-bucket join still re-chunks the WHOLE
+    * index on every call (corpus rows × chunks), so per-shard cost
+    * grows with the corpus. Returns (shard_id, corpus_id, hamming).
     */
   def simHashIncremental(
       shard: DataFrame,

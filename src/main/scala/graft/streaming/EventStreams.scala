@@ -365,8 +365,9 @@ object EventStreams {
     * (1) re-reads the on-disk signature index
     * (`Dedup.minHashSignatures` layout), (2) drops batch docs whose
     * estimated Jaccard against any INDEXED doc clears `threshold`
-    * (`Dedup.minHashLSHIncrementalSigs` — bipartite, bounded by batch
-    * size × bands, the corpus is never re-signed), (3) resolves
+    * (`Dedup.minHashLSHIncrementalSigs` — bipartite, the corpus is
+    * never re-signed, but the whole index is re-banded and
+    * bucket-counted every batch), (3) resolves
     * WITHIN-batch near-dup clusters to their min-id winner
     * (`Dedup.minHashLSHSigs` + `clusterDuplicates` — batch-sized work),
     * (4) lands accepted rows and their signatures in per-batch
@@ -481,27 +482,28 @@ object EventStreams {
   /** E8: streaming CDC apply — the streaming twin of batch
     * `Merge.applyChanges`: each micro-batch of change records
     * (payload + op + version columns) merges into an on-disk parquet
-    * snapshot, latest-wins. The loop per batch: read the snapshot
+    * snapshot, latest-wins. The loop per batch is
+    * [[SnapshotStore.maintain]]: read the previous snapshot
     * (bootstrap: empty with the payload schema), apply the batch's
-    * changes, materialize (`localCheckpoint` — the overwrite below
-    * invalidates the files the plan would lazily re-read), overwrite.
+    * changes, materialize, publish.
     *
-    * Delivery: `foreachBatch` replays under retry are IDEMPOTENT here
-    * — re-applying an identical change set to the already-merged
-    * snapshot is a fixpoint (latest-wins picks the same rows, deletes
-    * of absent keys no-op) — so at-least-once replay yields an
-    * effectively-exactly-once snapshot. Requirement: versions must be
-    * monotone per key ACROSS batches (the standard ordered-CDC-feed
-    * contract); the snapshot keeps no version history to reorder
-    * stragglers (within one batch, any order is fine).
+    * Delivery: exactly-once by the [[SnapshotStore.maintain]] fence —
+    * batch N applies its changes to the newest audited snapshot
+    * version below N and publishes version N, so a `foreachBatch`
+    * replay of N (a crash between publish and checkpoint commit)
+    * re-reads the same predecessor and rewrites the same snapshot. The
+    * snapshot root belongs to this query's checkpoint: version numbers
+    * are its batch ids. Requirement: versions must be monotone per key
+    * ACROSS batches (the standard ordered-CDC-feed contract); the
+    * snapshot keeps no version history to reorder stragglers (within
+    * one batch, any order is fine).
     *
-    * The snapshot publishes through [[SnapshotStore]] (write-audit-
-    * publish: immutable version dirs + atomic pointer flip), so a
-    * crash mid-write can never leave a half-overwritten snapshot where
-    * the next batch — or a downstream reader — would see it; read the
-    * live state with `SnapshotStore.read(spark, snapshotPath)`. A real
-    * lake's table-format transaction remains the multi-writer seam,
-    * as in [[ingestDedupMaintained]].
+    * The snapshot publishes write-audit-publish (immutable version
+    * dirs + atomic pointer flip), so a crash mid-write can never leave
+    * a half-overwritten snapshot where the next batch — or a
+    * downstream reader — would see it; read the live state with
+    * [[SnapshotStore.read]]. A real lake's table-format transaction
+    * remains the multi-writer seam, as in [[ingestDedupMaintained]].
     */
   def applyChangesMaintained(
       changes: DataFrame,
@@ -514,17 +516,13 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val payload = batch.columns.filterNot(c => c == versionCol || c == opCol)
-        // SnapshotStore.read resolves the last PUBLISHED version — a
-        // crashed write's orphan dir (no _SUCCESS, pointer untouched)
-        // is never mistaken for live state, and first-batch bootstrap
-        // is the None case, explicitly
-        val snap = SnapshotStore.read(spark, snapshotPath)
-          .getOrElse(batch.select(payload.map(col): _*).limit(0))
-        val merged = graft.operators.Merge.applyChanges(
-          snap, batch, keys, col(versionCol), col(opCol)).localCheckpoint()
-        SnapshotStore.publish(merged, snapshotPath, batchId)
+        SnapshotStore.maintain(batch.sparkSession, snapshotPath, batchId) { prev =>
+          // first-batch bootstrap: an empty snapshot with the payload schema
+          val snap = prev.getOrElse(batch.select(payload.map(col): _*).limit(0))
+          graft.operators.Merge.applyChanges(
+            snap, batch, keys, col(versionCol), col(opCol))
+        }
       }
       .start()
   }
@@ -642,11 +640,12 @@ object EventStreams {
     * snapshot answers [[graft.operators.Profile.cmsEstimate]] point
     * queries at any moment without touching the stream's history.
     *
-    * Delivery: foreachBatch replays are NOT idempotent for a merge
-    * (re-adding a batch double-counts) — the checkpoint's batch
-    * tracking provides effectively-once per epoch; a stricter lake
-    * would stamp batch ids into the snapshot (documented seam, as in
-    * E7/E8).
+    * Delivery: exactly-once by the [[SnapshotStore.maintain]] fence.
+    * Re-adding a batch to a snapshot that already holds it would
+    * double-count, so batch N merges into the newest audited version
+    * below N, never into its own published version N: a replay of N
+    * rewrites the same cells. The snapshot root belongs to this
+    * query's checkpoint (version numbers are its batch ids).
     */
   def cmsMaintained(
       keys: DataFrame,
@@ -659,14 +658,10 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val batchSketch = graft.operators.Profile.countMinSketch(
           batch, col(keyCol), width, depth)
-        val merged = SnapshotStore.read(spark, snapshotPath) match {
-          case Some(prev) => graft.operators.Profile.cmsMerge(Seq(prev, batchSketch))
-          case None => batchSketch
-        }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
+        SnapshotStore.maintain(batch.sparkSession, snapshotPath, batchId)(
+          _.fold(batchSketch)(p => graft.operators.Profile.cmsMerge(Seq(p, batchSketch))))
       }
       .start()
   }
@@ -685,10 +680,11 @@ object EventStreams {
     * estimates are EXACT and batch-split-invariant (the spec's
     * claim), above it the published rank envelope holds.
     *
-    * Delivery: same effectively-once-per-epoch contract as E14
-    * (foreachBatch replay of a merge double-counts; the checkpoint's
-    * batch tracking guards it, batch-id stamping is the documented
-    * stricter seam).
+    * Delivery: exactly-once by the [[SnapshotStore.maintain]] fence,
+    * as in E14: batch N unions into the newest audited version below
+    * N, so a replay of N rewrites the same sketches instead of
+    * absorbing the batch twice. The snapshot root belongs to this
+    * query's checkpoint.
     */
   def kllMaintained(
       values: DataFrame,
@@ -701,15 +697,11 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val batchSketch = graft.operators.Profile.quantileSketch(
           batch, col(groupCol), col(valueCol), k)
-        val merged = SnapshotStore.read(spark, snapshotPath) match {
-          case Some(prev) =>
-            graft.operators.Profile.quantileSketchUnion(Seq(prev, batchSketch), k)
-          case None => batchSketch
-        }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
+        SnapshotStore.maintain(batch.sparkSession, snapshotPath, batchId)(
+          _.fold(batchSketch)(p =>
+            graft.operators.Profile.quantileSketchUnion(Seq(p, batchSketch), k)))
       }
       .start()
   }
@@ -1595,6 +1587,11 @@ object EventStreams {
     * (spec-pinned, the E14/E20 batch-split-invariance contract); past
     * capacity the library's error bounds apply with the
     * NO_FALSE_NEGATIVES read guarantee intact.
+    *
+    * Delivery: exactly-once by the [[SnapshotStore.maintain]] fence,
+    * as in E14: a replay of batch N unions into the version below N
+    * and rewrites the same counts. The snapshot root belongs to this
+    * query's checkpoint.
     */
   def freqMaintained(
       items: DataFrame,
@@ -1607,16 +1604,11 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val batchSketch = graft.operators.Profile.freqSketchTable(
           batch, col(groupCol), col(itemCol), maxMapSize)
-        val merged = SnapshotStore.read(spark, snapshotPath) match {
-          case Some(prev) =>
-            graft.operators.Profile.freqSketchUnion(
-              Seq(prev, batchSketch), maxMapSize)
-          case None => batchSketch
-        }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
+        SnapshotStore.maintain(batch.sparkSession, snapshotPath, batchId)(
+          _.fold(batchSketch)(p =>
+            graft.operators.Profile.freqSketchUnion(Seq(p, batchSketch), maxMapSize)))
       }
       .start()
   }
@@ -1632,6 +1624,11 @@ object EventStreams {
     * stream history — the live twin of the D129 source-overlap
     * matrix. Under-capacity sketches merge EXACTLY (spec-pinned, the
     * E23 batch-split-invariance contract).
+    *
+    * Delivery: exactly-once by the [[SnapshotStore.maintain]] fence:
+    * batch N unions into the newest audited version below N, so a
+    * replay of N rewrites the same sketches. The snapshot root belongs
+    * to this query's checkpoint.
     */
   def thetaMaintained(
       items: DataFrame,
@@ -1644,32 +1641,61 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val batchSketch = graft.operators.Profile.thetaSketchTable(
           batch, col(groupCol), col(itemCol), lgK)
-        val merged = SnapshotStore.read(spark, snapshotPath) match {
-          case Some(prev) =>
-            graft.operators.Profile.thetaSketchUnion(
-              Seq(prev, batchSketch), lgK)
-          case None => batchSketch
-        }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
+        SnapshotStore.maintain(batch.sparkSession, snapshotPath, batchId)(
+          thetaFold(_, batchSketch, lgK))
       }
       .start()
   }
+
+  /** Per-group novelty of a batch theta sketch table `(grp, sketch)`
+    * against the corpus sketch table: `(grp, est_batch, est_new)`,
+    * est_new = `theta_diff_estimate(batch, corpus)`; a group the
+    * corpus lacks (or no corpus at all) is all-new. Shared by E45 and
+    * E46's ADMIT step.
+    */
+  private def thetaNovelty(batchSketch: DataFrame, corpus: Option[DataFrame]): DataFrame = {
+    import graft.functions.ThetaSketch.{thetaDiffEstimate, thetaEstimate}
+    corpus match {
+      case Some(c) =>
+        batchSketch.as("b").join(
+            c.withColumnRenamed("sketch", "__cs").as("c"), Seq("grp"), "left")
+          .select(col("grp"),
+            thetaEstimate(col("sketch")).as("est_batch"),
+            when(col("__cs").isNull, thetaEstimate(col("sketch")))
+              .otherwise(thetaDiffEstimate(col("sketch"), col("__cs")))
+              .as("est_new"))
+      case None =>
+        batchSketch.select(col("grp"),
+          thetaEstimate(col("sketch")).as("est_batch"),
+          thetaEstimate(col("sketch")).as("est_new"))
+    }
+  }
+
+  /** The corpus theta sketch table with `sketch` unioned in. */
+  private def thetaFold(corpus: Option[DataFrame], sketch: DataFrame, lgK: Int): DataFrame =
+    corpus.fold(sketch)(c => graft.operators.Profile.thetaSketchUnion(Seq(c, sketch), lgK))
 
   /** E45: streaming theta-diff ADMISSION gate — D138's a-not-b put to
     * work on arrivals: each micro-batch sketches itself per group,
     * scores "how much of this shard is NEW vs the corpus"
     * (`theta_diff_estimate(batch, corpus)`) BEFORE merging into the
     * persisted corpus sketch, and appends one verdict row per
-    * (batch, group) to E7-style per-batch dirs — replay-idempotent,
-    * no state store (both sketches are kilobyte blobs; the corpus is
-    * never re-read). The novelty ratio est_new/est_batch is the
-    * dedup-worthiness signal: a shard that is 95% old skips the
-    * expensive dedup tiers entirely. Estimates are EXACT under
+    * (batch, group) to E7-style per-batch dirs — no state store (both
+    * sketches are kilobyte blobs; the corpus is never re-read). The
+    * novelty ratio est_new/est_batch is the dedup-worthiness signal:
+    * a shard that is 95% old skips the expensive dedup tiers entirely. Estimates are EXACT under
     * nominal capacity (the D138 library contract) and overcount-only
     * above it — an all-old shard can never read as new.
+    *
+    * Delivery: exactly-once by the [[SnapshotStore.maintain]] fence.
+    * Batch N scores against, and merges into, the newest audited
+    * corpus version below N — never its own published version N,
+    * against which every group would read all-old — and overwrites
+    * its own `batch_id=N` verdict dir, so a replay of N rewrites the
+    * same verdicts and the same corpus sketch. The snapshot root
+    * belongs to this query's checkpoint.
     */
   def thetaAdmitStream(
       items: DataFrame,
@@ -1683,37 +1709,13 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val batchSketch = graft.operators.Profile.thetaSketchTable(
-          batch, col(groupCol), col(itemCol), lgK).localCheckpoint()
-        val prev = SnapshotStore.read(spark, snapshotPath)
-        val verdict = prev match {
-          case Some(corpus) =>
-            batchSketch.as("b").join(
-                corpus.withColumnRenamed("sketch", "__cs").as("c"),
-                Seq("grp"), "left")
-              .select(col("grp"),
-                graft.functions.ThetaSketch.thetaEstimate(col("sketch"))
-                  .as("est_batch"),
-                when(col("__cs").isNull,
-                  graft.functions.ThetaSketch.thetaEstimate(col("sketch")))
-                  .otherwise(graft.functions.ThetaSketch.thetaDiffEstimate(
-                    col("sketch"), col("__cs"))).as("est_new"))
-          case None =>
-            batchSketch.select(col("grp"),
-              graft.functions.ThetaSketch.thetaEstimate(col("sketch"))
-                .as("est_batch"),
-              graft.functions.ThetaSketch.thetaEstimate(col("sketch"))
-                .as("est_new"))
+        SnapshotStore.maintain(batch.sparkSession, snapshotPath, batchId) { prev =>
+          val batchSketch = graft.operators.Profile.thetaSketchTable(
+            batch, col(groupCol), col(itemCol), lgK).localCheckpoint()
+          thetaNovelty(batchSketch, prev).withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+          thetaFold(prev, batchSketch, lgK)
         }
-        verdict.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        val merged = prev match {
-          case Some(corpus) => graft.operators.Profile.thetaSketchUnion(
-            Seq(corpus, batchSketch), lgK)
-          case None => batchSketch
-        }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
       }
       .start()
   }
@@ -1754,18 +1756,21 @@ object EventStreams {
     *
     * Replay determinism (at-least-once → exactly-once output): every
     * read of mutable state is version-fenced to strictly-older batches
-    * — the theta snapshot reads the newest version < N (publish keeps
-    * 2 versions so the predecessor survives its successor's GC) and
-    * the signature index filters `batch_id < N` — so a crash between
-    * the artifact writes and the checkpoint commit replays batch N
-    * against exactly the pre-N state and rewrites byte-identical
-    * output (seeded hash family, deterministic winners).
+    * — the batch runs inside [[SnapshotStore.maintain]], so the theta
+    * snapshot reads the newest audited version < N, and the signature
+    * index filters `batch_id < N` — so a crash between the artifact
+    * writes and the checkpoint commit replays batch N against exactly
+    * the pre-N state and rewrites byte-identical output (seeded hash
+    * family, deterministic winners). The snapshot, index, output and
+    * verdict roots belong to this query's checkpoint.
     *
     * 100 TB shape: admission is kilobyte sketch blobs (no state
-    * store), the gate is stateless, dedup work is bounded by
-    * batch × bands with `maxBucket`-capped corpus buckets, and
-    * unbounded dedup memory lives in the on-disk index where it
-    * belongs.
+    * store) and the gate is stateless, so both scale with the batch.
+    * Dedup does not yet: every batch re-reads the whole stored
+    * signature index, re-bands every stored signature (rows × bands)
+    * and runs the `maxBucket` bucket-count window over all of them,
+    * so its per-batch cost grows with the corpus. Unbounded dedup
+    * memory does live in the on-disk index, not in a state store.
     */
   def corpusBuildStream(
       docs: DataFrame,
@@ -1827,65 +1832,39 @@ object EventStreams {
       shingleSize: Int = 5,
       threshold: Double = 0.5,
       lgK: Int = 12): Unit = {
-    val spark = batch.sparkSession
-    import graft.functions.ThetaSketch
+    // the fenced step hands steps 1-3 the corpus sketch version below
+    // N and publishes step 4's merge as version N
+    SnapshotStore.maintain(batch.sparkSession, thetaSnapshotPath, batchId) { prev =>
+      // ---- 1. ADMIT: per-group novelty vs the version-fenced corpus sketch
+      val batchSketch = graft.operators.Profile.thetaSketchTable(
+        batch, col(groupCol), col(textCol), lgK).localCheckpoint()
+      val verdict = thetaNovelty(batchSketch, prev)
+        .select(col("grp"), col("est_batch"), col("est_new"),
+          coalesce(try_divide(col("est_new"), col("est_batch")), lit(0.0))
+            .as("novelty"))
+        .withColumn("admitted", col("novelty") >= minNovelty)
+        .localCheckpoint()
+      verdict.withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(s"$verdictPath/batch_id=$batchId")
+      val admitted = batch.join(
+        broadcast(verdict.filter(col("admitted")).select(col("grp").as("__adm"))),
+        col(groupCol) === col("__adm"), "left_semi")
 
-    // ---- 1. ADMIT: per-group novelty vs the version-fenced corpus sketch
-    val batchSketch = graft.operators.Profile.thetaSketchTable(
-      batch, col(groupCol), col(textCol), lgK).localCheckpoint()
-    val prev = SnapshotStore.versions(spark, thetaSnapshotPath)
-      .filter(_ < batchId).lastOption
-      .flatMap(v => SnapshotStore.readVersion(spark, thetaSnapshotPath, v))
-    val scored = prev match {
-      case Some(corpus) =>
-        batchSketch.as("b").join(
-            corpus.withColumnRenamed("sketch", "__cs").as("c"),
-            Seq("grp"), "left")
-          .select(col("grp"),
-            ThetaSketch.thetaEstimate(col("sketch")).as("est_batch"),
-            when(col("__cs").isNull, ThetaSketch.thetaEstimate(col("sketch")))
-              .otherwise(ThetaSketch.thetaDiffEstimate(col("sketch"), col("__cs")))
-              .as("est_new"))
-      case None =>
-        batchSketch.select(col("grp"),
-          ThetaSketch.thetaEstimate(col("sketch")).as("est_batch"),
-          ThetaSketch.thetaEstimate(col("sketch")).as("est_new"))
+      // ---- 2. GATE + SIGN: stateless quality + language curation, and
+      // the MinHash signature, materialized as ONE seam that every tier
+      // below reads
+      val signed = signOnce(
+        curateStream(graft.operators.scaleOut(admitted), textCol, minQuality),
+        textCol, numHashes, shingleSize)
+
+      // ---- 3. DEDUP: vs the batch-fenced signature index, then in-batch
+      val accepted = nearDedupSigned(signed, idCol, sigPath, outPath, batchId,
+        numHashes, bands, threshold)
+
+      // ---- 4. MAINTAIN: corpus sketch tracks the ACCEPTED corpus
+      thetaFold(prev, graft.operators.Profile.thetaSketchTable(
+        accepted, col(groupCol), col(textCol), lgK), lgK)
     }
-    val verdict = scored
-      .select(col("grp"), col("est_batch"), col("est_new"),
-        coalesce(try_divide(col("est_new"), col("est_batch")), lit(0.0))
-          .as("novelty"))
-      .withColumn("admitted", col("novelty") >= minNovelty)
-      .localCheckpoint()
-    verdict.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").parquet(s"$verdictPath/batch_id=$batchId")
-    val admitted = batch.join(
-      broadcast(verdict.filter(col("admitted")).select(col("grp").as("__adm"))),
-      col(groupCol) === col("__adm"), "left_semi")
-
-    // ---- 2. GATE + SIGN: stateless quality + language curation, and
-    // the MinHash signature, materialized as ONE seam that every tier
-    // below reads
-    val signed = signOnce(
-      curateStream(graft.operators.scaleOut(admitted), textCol, minQuality),
-      textCol, numHashes, shingleSize)
-
-    // ---- 3. DEDUP: vs the batch-fenced signature index, then in-batch
-    val accepted = nearDedupSigned(signed, idCol, sigPath, outPath, batchId,
-      numHashes, bands, threshold)
-
-    // ---- 4. MAINTAIN: corpus sketch tracks the ACCEPTED corpus
-    val accSketch = graft.operators.Profile.thetaSketchTable(
-      accepted, col(groupCol), col(textCol), lgK)
-    val merged = prev match {
-      case Some(corpus) =>
-        graft.operators.Profile.thetaSketchUnion(Seq(corpus, accSketch), lgK)
-      case None => accSketch
-    }
-    // keepLast = 2: the predecessor must survive this publish's GC so
-    // a replay of THIS batch can still read it (the version fence)
-    SnapshotStore.publish(merged.localCheckpoint(), thetaSnapshotPath,
-      batchId, keepLast = 2)
   }
 
   /** E48: streaming duplicated-n-gram COVERAGE gate — D146's ONION
@@ -1981,8 +1960,8 @@ object EventStreams {
     * ([[graft.operators.Behavior.rfmScoresSketched]]) — the snapshot
     * contract is unchanged either way.
     *
-    * Replay-safe the E46 way: reads the newest snapshot version
-    * strictly below the current batch id (publish keeps 2), so a
+    * Replay-safe by the [[SnapshotStore.maintain]] fence: batch N
+    * merges into the newest audited version strictly below N, so a
     * crash between publish and checkpoint-commit replays batch N
     * against the pre-N state. State is |users| rows of fixed width on
     * disk — no state store, mergeable at any scale.
@@ -1998,7 +1977,6 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val b = batch
           .filter(col(userCol).isNotNull && col(tsNsCol).isNotNull)
           .groupBy(col(userCol).as("user_id"))
@@ -2007,19 +1985,12 @@ object EventStreams {
             count(lit(1)).as("frequency"),
             coalesce(sum(col(valueCol).cast("decimal(18,2)")),
               lit(0).cast("decimal(18,2)")).as("monetary"))
-        val prev = SnapshotStore.versions(spark, snapshotPath)
-          .filter(_ < batchId).lastOption
-          .flatMap(v => SnapshotStore.readVersion(spark, snapshotPath, v))
-        val merged = (prev match {
-          case Some(p) => p.unionByName(b)
-          case None => b
-        }).groupBy("user_id")
-          .agg(
-            max(col("__last")).as("__last"),
-            sum(col("frequency")).as("frequency"),
-            sum(col("monetary")).cast("decimal(18,2)").as("monetary"))
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath,
-          batchId, keepLast = 2)
+        SnapshotStore.maintain(batch.sparkSession, snapshotPath, batchId)(prev =>
+          prev.fold(b)(_.unionByName(b)).groupBy("user_id")
+            .agg(
+              max(col("__last")).as("__last"),
+              sum(col("frequency")).as("frequency"),
+              sum(col("monetary")).cast("decimal(18,2)").as("monetary")))
       }
       .start()
   }
@@ -2036,9 +2007,10 @@ object EventStreams {
     * [[graft.operators.Stats.hosmerLemeshowFixed]]'s shared tail over
     * the snapshot — the IDENTICAL code path the batch operator uses
     * (the E47 discipline; the spec proves stream-maintained == batch
-    * over the full feed). Replay-safe the E46 way: reads the newest
-    * snapshot version strictly below the current batch id. State is
-    * ≤ |edges|+1 rows of three integers — no state store.
+    * over the full feed). Replay-safe by the [[SnapshotStore.maintain]]
+    * fence: batch N merges into the newest audited version strictly
+    * below N. State is ≤ |edges|+1 rows of three integers — no state
+    * store.
     */
   def hlMaintained(
       scores: DataFrame,
@@ -2052,20 +2024,12 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val b = graft.operators.Stats.hlBins(
           batch, col(scoreCol), col(labelCol), edges)
-        val prev = SnapshotStore.versions(spark, snapshotPath)
-          .filter(_ < batchId).lastOption
-          .flatMap(v => SnapshotStore.readVersion(spark, snapshotPath, v))
-        val merged = (prev match {
-          case Some(p) => p.unionByName(b)
-          case None => b
-        }).groupBy("__bin")
-          .agg(sum(col("__n")).as("__n"), sum(col("__o")).as("__o"),
-            sum(col("__se")).as("__se"))
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath,
-          batchId, keepLast = 2)
+        SnapshotStore.maintain(batch.sparkSession, snapshotPath, batchId)(prev =>
+          prev.fold(b)(_.unionByName(b)).groupBy("__bin")
+            .agg(sum(col("__n")).as("__n"), sum(col("__o")).as("__o"),
+              sum(col("__se")).as("__se")))
       }
       .start()
   }

@@ -32,6 +32,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * on disk and [[readVersion]] reads any of them — the offline half of
   * a table format's snapshot reads (Iceberg/Delta transactional
   * commits remain the documented production seam).
+  *
+  * [[maintain]] is the per-batch step every snapshot-maintained
+  * stream runs: fenced read, merge, publish.
   */
 object SnapshotStore {
 
@@ -166,6 +169,32 @@ object SnapshotStore {
       hfs.delete(new Path(rootP, s"v$v"), true))
   }
 
+  /** One fenced maintenance step of a streaming snapshot — the loop
+    * every `foreachBatch`-maintained snapshot runs:
+    *
+    *  1. FENCE: read the newest audited version strictly below
+    *     `batchId` (None before the first publish). A version already
+    *     published as `batchId` — a replay after its publish — and any
+    *     unaudited orphan are never read.
+    *  2. `next` merges the batch into that state.
+    *  3. The result is materialized (`localCheckpoint`: the publish
+    *     below may GC files the lazy plan would re-read).
+    *  4. It publishes as version `batchId` with `keepLast = 2`, so the
+    *     predecessor survives this publish and a replay of `batchId`
+    *     reads exactly the state the first run read.
+    *
+    * So a replayed batch rewrites identical state (exactly-once by
+    * construction, given a deterministic `next`). The contract is one
+    * writer per root, and the root belongs to one checkpoint: the
+    * fence reads version numbers as that checkpoint's batch ids.
+    */
+  def maintain(spark: SparkSession, root: String, batchId: Long)(
+      next: Option[DataFrame] => DataFrame): Unit = {
+    val prev = versions(spark, root).filter(_ < batchId).lastOption
+      .flatMap(readVersion(spark, root, _))
+    publish(next(prev).localCheckpoint(), root, batchId, keepLast = 2)
+  }
+
   /** Create-exclusive: the CAS under [[commit]]. Local filesystems go
     * through java.io.File.createNewFile (POSIX O_CREAT|O_EXCL — truly
     * atomic); everything else through FileSystem.create(overwrite =
@@ -220,7 +249,7 @@ object SnapshotStore {
     * bookkeeping that doubles as the commit audit trail. Returns the
     * committed version. NOT idempotent per batch (a retry of the same
     * logical batch lands a NEW version) — streaming replays that need
-    * exactly-once keep using `publish(batchId)`; this is the tier for
+    * exactly-once keep using [[maintain]]; this is the tier for
     * independent jobs sharing one table.
     */
   def commit(df: DataFrame, root: String, keepLast: Int = 1,

@@ -528,6 +528,37 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("SnapshotStore.maintain: batch N reads the newest audited version below N and keeps it") {
+    val root = java.nio.file.Files.createTempDirectory("graft_fence").toString + "/snap"
+    var seen: Option[Set[String]] = None
+    def step(n: Long): Unit = SnapshotStore.maintain(spark, root, n) { prev =>
+      seen = prev.map(_.as[String].collect().toSet)
+      Seq(s"s$n").toDF("v")
+    }
+    def live() = SnapshotStore.read(spark, root).get.as[String].collect().toSet
+    step(0L)
+    assert(seen.isEmpty, "the first batch must bootstrap from no state")
+    step(1L)
+    assert(seen.contains(Set("s0")) && live() == Set("s1"))
+    // replay of batch 1 after its publish: the audited v1 already on
+    // disk must not be read, and v0 must still be there to read
+    step(1L)
+    assert(seen.contains(Set("s0")), s"replay of batch 1 read $seen")
+    // an unaudited orphan below N (a crashed write) is never read
+    val orphan = new java.io.File(s"$root/v2")
+    orphan.mkdirs()
+    java.nio.file.Files.write(orphan.toPath.resolve("part-00000.parquet"), Array[Byte](1, 2))
+    step(3L)
+    assert(seen.contains(Set("s1")), s"batch 3 read $seen past the orphan")
+    assert(!orphan.exists(), "the publish must GC the orphan")
+    step(4L)
+    assert(seen.contains(Set("s3")) && live() == Set("s4"))
+    // N-1 survives the publish of N, so a replay of N reads it again
+    assert(SnapshotStore.versions(spark, root) == Seq(1L, 3L, 4L))
+    step(4L)
+    assert(seen.contains(Set("s3")) && live() == Set("s4"))
+  }
+
   test("SnapshotStore.commit: concurrent publishers both land — no lost update") {
     val root = java.nio.file.Files.createTempDirectory("graft_occ").toString + "/snap"
     // two INTERLEAVED publishers race the CAS from real threads, three
